@@ -15,21 +15,23 @@ with the same timeout / concurrency-window / fail-any semantics.
 Deliberate divergence (SURVEY.md §2A quirks): the reference leaks a
 goroutine on timeout (its inner send on an unbuffered channel blocks
 forever after the timeout branch wins, ``impala-refresher.go:62`` vs
-``:81-86``); here timed-out futures are cancelled/abandoned safely —
-a ThreadPoolExecutor worker never blocks on result delivery.
+``:81-86``). Here a timed-out target's Spark jobs are cancelled and its
+daemon worker is abandoned: it never blocks on delivering a result and
+cannot hold the process open at exit (``concurrency.run_tasks``).
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Callable, Sequence
-from concurrent.futures import ThreadPoolExecutor, TimeoutError as FutureTimeout
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from impala_refresher_spark.concurrency import Outcome, run_tasks
 from impala_refresher_spark.registry import query
 
 RESULT_SCHEMA = T.StructType(
@@ -91,87 +93,26 @@ def refresh_many(
     ``refresh_fn`` is an injection point for tests (slow/failing
     targets) — defaults to the real catalog call.
 
-    Timeout fidelity (two upgrades over the round-1 shape):
-
-    - The clock starts at each target's ACTUAL start (recorded by the
-      worker), not at reap time — a target can never be flagged before
-      it has had ``timeout`` seconds of its own, and a still-queued
-      target (bounded window) is never reported timed out unrun.
-    - A timed-out target is really CANCELLED: each worker runs inside
-      its own Spark job group (thread-local in pinned-thread mode) and
-      the reaper calls ``cancelJobGroup``, interrupting any running
-      Spark jobs — matching the reference's process kill
-      (``impala-refresher.go:81-86``) without its goroutine leak.
+    Timeout fidelity (``concurrency.run_tasks``): the clock starts at
+    each target's ACTUAL start, so a still-queued target (bounded
+    window) is never reported timed out unrun; a timed-out target's
+    Spark job group is cancelled, interrupting its running jobs — the
+    reference's process kill (``impala-refresher.go:81-86``) without
+    its goroutine leak. Timeout and exception rows report the real
+    ``duration_ms`` from the target's own start.
     """
     fn = refresh_fn or refresh_table
-    sc = spark.sparkContext
-    max_workers = concurrency if concurrency > 0 else max(len(tables), 1)
-    starts: dict[str, float] = {}
-    groups = {t: f"refresh-{i}-{t}" for i, t in enumerate(tables)}
+    tasks = [(t, partial(fn, spark, t)) for t in tables]
 
-    def run_target(target: str) -> RefreshResult:
-        starts[target] = time.monotonic()
-        try:
-            sc.setJobGroup(groups[target], f"refresh {target}", interruptOnCancel=True)
-        except Exception:
-            pass  # job-group bookkeeping must never fail the refresh
-        try:
-            return fn(spark, target)
-        finally:
-            try:
-                sc.setJobGroup("", "")
-            except Exception:
-                pass
+    def as_result(o: Outcome) -> RefreshResult:
+        if not o.timed_out and o.error is None:
+            return o.value
+        why = f" (timeout after {timeout}s)" if o.timed_out else f": {o.error}"
+        err = f"{o.name}'s catalog did not refresh{why}"
+        return RefreshResult(o.name, False, err, int(o.elapsed_s * 1000))
 
-    results: list[RefreshResult] = []
-    pool = ThreadPoolExecutor(max_workers=max_workers)
-    try:
-        futures = {pool.submit(run_target, t): t for t in tables}
-        for fut, target in futures.items():
-            while True:
-                started_at = starts.get(target)
-                if started_at is None:
-                    # queued behind the concurrency window: its clock
-                    # has not started — poll until a worker picks it up
-                    try:
-                        results.append(fut.result(timeout=0.05))
-                        break
-                    except FutureTimeout:
-                        continue
-                remaining = timeout - (time.monotonic() - started_at)
-                if remaining <= 0:
-                    fut.cancel()
-                    try:  # stop the target's running Spark jobs for real
-                        sc.cancelJobGroup(groups[target])
-                    except Exception:
-                        pass
-                    results.append(
-                        RefreshResult(
-                            target,
-                            False,
-                            f"{target}'s catalog did not refresh (timeout after {timeout}s)",
-                            int(timeout * 1000),
-                        )
-                    )
-                    break
-                try:
-                    results.append(fut.result(timeout=remaining))
-                    break
-                except FutureTimeout:
-                    continue  # re-check: another target may have started meanwhile
-                except Exception as exc:
-                    results.append(
-                        RefreshResult(
-                            target, False, f"{target}'s catalog did not refresh: {exc}", 0
-                        )
-                    )
-                    break
-    finally:
-        # Do NOT wait for abandoned (timed-out) workers — the reference
-        # leaks a blocked goroutine here; we just let the worker finish
-        # in the background and reap the thread at process exit.
-        pool.shutdown(wait=False, cancel_futures=True)
-    return results
+    outcomes = run_tasks(spark, "refresh", tasks, window=concurrency, timeout=timeout)
+    return [as_result(o) for o in outcomes]
 
 
 def all_refreshed(results: Sequence[RefreshResult]) -> bool:

@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(app_name: str = "impala_refresher_spark") -> SparkSession:
     """Return (or create) the tuned SparkSession.
@@ -23,15 +21,11 @@ def get_spark(app_name: str = "impala_refresher_spark") -> SparkSession:
     spark-submit; everything else here is deployment-independent.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_AQE are test/experiment hooks
-    # (defaults unchanged): the pytest session narrows shuffle width for
-    # its KB-sized inputs; bench/driver runs never set them.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", str(DEFAULT_SHUFFLE_PARTITIONS))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_AQE", "true"))
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

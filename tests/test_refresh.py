@@ -5,6 +5,10 @@ bounded concurrency window (:122-131), fail-any status fold (:97,
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
 import threading
 import time
 
@@ -157,6 +161,63 @@ def test_refresh_timeout_cancels_running_spark_job(spark):
     )
     assert not all_refreshed(results)
     assert interrupted.wait(timeout=10), "Spark job was not cancelled on timeout"
+
+
+def test_refresh_error_row_reports_real_elapsed(spark):
+    """A target that works 0.3 s and then raises reports the time it
+    ran, not 0 — the reference reports every node's real duration
+    (impala-refresher.go:96-101)."""
+
+    def fails_late(s, name):
+        time.sleep(0.3)
+        raise RuntimeError("boom")
+
+    (r,) = refresh_many(spark, ["late"], timeout=5.0, refresh_fn=fails_late)
+    assert not r.refreshed and "boom" in r.error
+    assert r.duration_ms >= 300, r
+
+
+_EXIT_SCRIPT = textwrap.dedent(
+    """
+    import time
+    from impala_refresher_spark.operators.refresh import refresh_many
+
+    class _Context:  # the job-group calls refresh_many makes, no JVM
+        def setJobGroup(self, *args, **kwargs):
+            pass
+
+        def cancelJobGroup(self, group):
+            pass
+
+    class _Session:
+        sparkContext = _Context()
+
+    def hangs(spark, name):
+        time.sleep(6)
+
+    (r,) = refresh_many(_Session(), ["t"], timeout=0.2, refresh_fn=hangs)
+    print(r.refreshed, r.duration_ms)
+    """
+)
+
+
+def test_refresh_timeout_bounds_process_exit():
+    """A timed-out target must not hold the process open: the CLI's
+    --timeout bounds how long it runs, although the abandoned refresh
+    is still sleeping when refresh_many returns."""
+    t0 = time.monotonic()
+    p = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT],
+        capture_output=True,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=60,
+    )
+    wall = time.monotonic() - t0
+    assert p.returncode == 0, p.stderr[-2000:]
+    refreshed, ms = p.stdout.split()
+    assert refreshed == "False" and int(ms) >= 200
+    assert wall < 3, f"process took {wall:.2f}s to exit"
 
 
 def test_recover_partitions_discovers_all(spark, sf_dir, tmp_path_factory):
